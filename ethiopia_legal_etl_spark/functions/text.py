@@ -41,9 +41,10 @@ def base_name_from_url(url: Column) -> Column:
     Regex notes (hypothesis-differential-tested vs os.path semantics):
     - `\\z` not `$`: Java/RE2 `$` can match before a trailing newline;
       `\\z` is true end-of-text in both engines.
-    - extension strip requires a NON-DOT char before the dot (capture,
-      not lookbehind — RE2 has no lookbehind): splitext('.pdf') keeps
-      the hidden-file name whole.
+    - extension strip is os.path.splitext's rule: cut at the LAST dot
+      when some non-dot char precedes it (so splitext('.pdf') keeps the
+      hidden-file name whole, and '0..0' → '0.'); a capture, not
+      lookbehind — RE2 has no lookbehind.
     - `(?s)` so query/fragment stripping crosses newlines.
     """
     # urlparse strips tab/CR/LF before parsing (WHATWG unsafe chars)
@@ -53,7 +54,7 @@ def base_name_from_url(url: Column) -> Column:
     # urlparse also splits `;params` (RFC 1808) off the LAST segment —
     # which is exactly the basename
     base = F.regexp_replace(seg, r"(?s);.*", "")
-    stem = F.regexp_replace(base, r"([^.])\.[^.]*\z", r"$1")
+    stem = F.regexp_replace(base, r"(?s)^(\.*[^.].*)\.[^.]*\z", r"$1")
     return F.regexp_replace(stem, "%20", "_")
 
 

@@ -55,13 +55,23 @@ def build_document_record(
     ingest_date=None uses current_date() (production); tests inject a
     constant (§2.C-7).
     """
+    return df.select(*document_columns(url_col, content_col, ingest_date))
+
+
+def document_columns(
+    url_col: str = "sourceURL",
+    content_col: str = "content",
+    ingest_date: str | None = DEFAULT_INGEST_DATE,
+) -> list[Column]:
+    """The columns of build_document_record, in the reference dict's
+    literal order — for callers that project them beside other columns."""
     base = base_name_from_url(F.col(url_col))
     date_expr = (
         F.date_format(F.current_date(), "yyyy-MM-dd")
         if ingest_date is None
         else F.lit(ingest_date)
     )
-    return df.select(
+    return [
         title_from_base_name(base).alias("title"),
         extract_year(F.col(content_col)).alias("year"),
         F.col(url_col).alias("sourceURL"),
@@ -82,7 +92,7 @@ def build_document_record(
         F.struct(
             F.array().cast("array<string>").alias("placeholders")
         ).alias("templateFields"),
-    )
+    ]
 
 
 def split_rejects(df: DataFrame, ok_predicate: Column) -> tuple[DataFrame, DataFrame]:
@@ -127,11 +137,11 @@ def doc_year_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
       REPLACE(REGEXP_REPLACE(REGEXP_EXTRACT(
           CONCAT('https://fsc.example.et/files/', COALESCE(source, ''), '/vol%20',
                  CAST(doc_id AS VARCHAR), '.pdf'),
-          '([^/]+)\\z', 1), '([^.])\\.[^.]*\\z', '\\1'), '%20', '_')  AS base_name,
+          '([^/]+)\\z', 1), '(?s)^(\\.*[^.].*)\\.[^.]*\\z', '\\1'), '%20', '_')  AS base_name,
       REPLACE(REPLACE(REGEXP_REPLACE(REGEXP_EXTRACT(
           CONCAT('https://fsc.example.et/files/', COALESCE(source, ''), '/vol%20',
                  CAST(doc_id AS VARCHAR), '.pdf'),
-          '([^/]+)\\z', 1), '([^.])\\.[^.]*\\z', '\\1'), '%20', '_'), '_', ' ') AS title,
+          '([^/]+)\\z', 1), '(?s)^(\\.*[^.].*)\\.[^.]*\\z', '\\1'), '%20', '_'), '_', ' ') AS title,
       REGEXP_EXTRACT(SUBSTRING(text, 1, 1000),
                      '\\b(19[5-9]\\d|20\\d{{2}})\\b', 1)          AS year,
       '{DEFAULT_INGEST_DATE}'                                     AS dateIngested,

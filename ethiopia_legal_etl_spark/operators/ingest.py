@@ -1,8 +1,11 @@
 """The reference's ingest pipeline re-architected as one lazy DataFrame
 graph (SURVEY.md §3 entry points 1-3):
 
-  links → anti-join(done) → fetch → content-type filter → extract
-        → empty filter (rejects routed, not deleted) → doc projection
+  links → anti-join(done) → fetch → pdf_ok flag → extract(pdf_ok only)
+        = per-link OUTCOME frame (url, pdf_ok, content_type, content,
+          error), lazily localCheckpointed
+        → by filter: documents (doc projection) and rejects (routed,
+          not deleted)
 
 The reference iterates URLs one at a time in a single thread
 (`fetch_legal_docs.py:32`, `import requests.py:120-121`); here the
@@ -14,26 +17,45 @@ callables) so the pipeline is offline-testable (FIXTURES.md §2.3) and
 codec-agnostic (pdfplumber vs PyMuPDF, both in the reference's
 requirements.txt, may be absent here — SURVEY.md §7 hard-part (a)).
 
-Fetch and extract are SEPARATE stages (repartitioned between) so
-CPU-heavy extraction stragglers don't hold HTTP connections open
-(SURVEY.md §4 physical-design note).
+Both sinks read the one outcome frame, so each link is fetched once
+and each PDF extracted once, as in the reference's loop. The checkpoint
+is lazy (eager=False): the first sink write computes it and stores its
+blocks, the second write reads them — no job is added for it.
+- `body` never reaches the checkpoint: the extract stage consumes it
+  and emits text only; non-PDF bodies are nulled on the JVM side
+  before they cross to the extract worker.
+- localCheckpoint blocks live on executors with no lineage behind them:
+  losing an executor between the two writes fails the second one
+  rather than recomputing. That is the repo-wide policy (no
+  plan-matched cache/persist, whose blocks a later identical run would
+  reuse), enforced by tests/test_cache_scoping.py.
+- There is no default repartition (fetch_partitions=None keeps the
+  input's partitioning): hashing the links over defaultParallelism
+  cut wall time on the 40-PDF benchmark corpus but raised its CPU
+  time by 15%.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ethiopia_legal_etl_spark.functions.text import (
     base_name_from_url,
     is_pdf_content_type,
 )
-from ethiopia_legal_etl_spark.operators.etl import build_document_record
+from ethiopia_legal_etl_spark.operators.etl import (
+    build_document_record,
+    document_columns,
+)
 
 FETCHED_SCHEMA = "url string, status int, content_type string, body binary, error string"
 EXTRACTED_SCHEMA = "url string, content string, error string"
+OUTCOME_SCHEMA = (
+    "url string, pdf_ok boolean, content_type string, content string, error string"
+)
 
 # fetcher: url -> (status, content_type, body bytes); raises on error
 Fetcher = Callable[[str], tuple[int, str, bytes]]
@@ -179,12 +201,19 @@ def polite_fetch_stage(
     )
 
 
-def content_type_filter(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """A-8: keep responses whose Content-Type CONTAINS application/pdf
-    (substring, not equality — §2.C-5); everything else → rejects."""
-    ok_pred = F.col("error").isNull() & is_pdf_content_type(
+def pdf_ok_predicate() -> Column:
+    """A-8: a fetched row is a PDF when it fetched without error and its
+    Content-Type CONTAINS application/pdf (substring, not equality —
+    §2.C-5). Never null."""
+    return F.col("error").isNull() & is_pdf_content_type(
         F.coalesce(F.col("content_type"), F.lit(""))
     )
+
+
+def content_type_filter(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A-8: keep PDF responses (pdf_ok_predicate); everything else →
+    rejects."""
+    ok_pred = pdf_ok_predicate()
     ok = fetched.where(ok_pred)
     rejects = fetched.where(~ok_pred | ok_pred.isNull())
     return ok, rejects
@@ -202,17 +231,62 @@ def extract_stage(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for url, body in zip(pdf["url"], pdf["body"]):
-                try:
-                    pages = extract(bytes(body))
-                    content = "\n".join(p for p in pages if p)  # drop empties
-                    rows.append((url, content, None))
-                except Exception as exc:
-                    rows.append((url, None, f"{type(exc).__name__}: {exc}"))
+            rows = [
+                (url, *extract_text(extract, body))
+                for url, body in zip(pdf["url"], pdf["body"])
+            ]
             yield pd.DataFrame(rows, columns=["url", "content", "error"])
 
     return fetched.select("url", "body").mapInPandas(run, schema=EXTRACTED_SCHEMA)
+
+
+def extract_text(
+    extract: Extractor, body: bytes, keep_empty: bool = False
+) -> tuple[str | None, str | None]:
+    """One PDF → (content, error), errors isolated per record (A-19).
+    Pages are joined with \\n; empty pages are dropped first unless
+    keep_empty (the mcp_server variant, §2.C-3)."""
+    try:
+        pages = extract(bytes(body))
+        if keep_empty:
+            return "\n".join(p or "" for p in pages), None
+        return "\n".join(p for p in pages if p), None
+    except Exception as exc:
+        return None, f"{type(exc).__name__}: {exc}"
+
+
+def outcome_stage(
+    fetched: DataFrame, extractor: Extractor | None = None
+) -> DataFrame:
+    """Per-link outcome (OUTCOME_SCHEMA): the JVM flags pdf_ok
+    (pdf_ok_predicate), then one mapInPandas extracts the pdf_ok rows
+    (batch semantics, as extract_stage) and passes the others through
+    with their fetch error. The body is dropped here: only PDF bodies
+    are sent to the worker and no body leaves it."""
+    import pandas as pd
+
+    extract = extractor or default_extractor
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for url, ok, ctype, body, error in zip(
+                pdf["url"], pdf["pdf_ok"], pdf["content_type"], pdf["body"],
+                pdf["error"],
+            ):
+                content = None
+                if ok:
+                    content, error = extract_text(extract, body)
+                rows.append((url, bool(ok), ctype, content, error))
+            yield pd.DataFrame(
+                rows, columns=["url", "pdf_ok", "content_type", "content", "error"]
+            )
+
+    ok = pdf_ok_predicate()
+    return fetched.select(
+        "url", ok.alias("pdf_ok"), "content_type",
+        F.when(ok, F.col("body")).alias("body"), "error",
+    ).mapInPandas(run, schema=OUTCOME_SCHEMA)
 
 
 def ingest_pipeline(
@@ -223,7 +297,8 @@ def ingest_pipeline(
     ingest_date: str | None = None,
     fetch_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Full A-pipeline; returns (documents, rejects).
+    """Full A-pipeline; returns (documents, rejects), both filters of
+    one lazily checkpointed outcome frame (module docstring).
 
     rejects carries (url, stage, error) — the engine's replacement for
     the reference's silent drop (§2.C-8).
@@ -233,31 +308,27 @@ def ingest_pipeline(
         # spread network/CPU work; the reference's loop is n=1
         todo = todo.repartition(fetch_partitions, "url")
 
-    fetched = fetch_stage(todo, fetcher)
-    pdf_ok, ct_rejects = content_type_filter(fetched)
-
-    extracted = extract_stage(pdf_ok, extractor)
-    nonempty = extracted.where(
-        F.col("error").isNull() & (F.trim(F.col("content")) != "")
+    outcome = outcome_stage(fetch_stage(todo, fetcher), extractor).localCheckpoint(
+        eager=False
     )
-    ex_rejects = extracted.where(
-        F.col("error").isNotNull() | (F.trim(F.col("content")) == "")
-    )
+    pdf_ok = F.col("pdf_ok")
+    is_doc = pdf_ok & F.col("error").isNull() & (F.trim(F.col("content")) != "")
 
     docs = build_document_record(
-        nonempty.withColumn("sourceURL", F.col("url")),
+        outcome.where(is_doc).withColumn("sourceURL", F.col("url")),
         url_col="sourceURL",
         content_col="content",
         ingest_date=ingest_date,
     )
-    rejects = ct_rejects.select(
-        "url", F.lit("fetch/content-type").alias("stage"),
-        F.coalesce("error", F.concat(F.lit("not pdf: "), "content_type")).alias("error"),
-    ).unionByName(
-        ex_rejects.select(
-            "url", F.lit("extract/empty").alias("stage"),
-            F.coalesce("error", F.lit("empty document")).alias("error"),
-        )
+    rejects = outcome.where(~is_doc).select(
+        "url",
+        F.when(pdf_ok, "extract/empty").otherwise("fetch/content-type").alias("stage"),
+        F.coalesce(
+            "error",
+            F.when(pdf_ok, "empty document").otherwise(
+                F.concat(F.lit("not pdf: "), "content_type")
+            ),
+        ).alias("error"),
     )
     return docs, rejects
 
@@ -298,46 +369,36 @@ def ingest_single(
     - returns an error OBJECT on failure rather than dropping the
       record (mcp_server.py:24,30);
     - response record has NO year and NO tags fields (mcp_server.py:32-41).
+
+    The document record is projected on the extracted frame itself, so
+    one collect (one Spark job) is the whole response.
     """
-    links = spark.createDataFrame([(pdf_url,)], "url: string")
-    pdf_ok = fetch_stage(links, fetcher)  # no content-type filter: mcp parity
-
-    # mcp variant: keep empty pages (join with \n, no filter)
-    base_extract = extractor or default_extractor
-
-    def keep_empty(body: bytes) -> list[str]:
-        return [p or "" for p in base_extract(body)]
-
     import pandas as pd
 
-    def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+    extract = extractor or default_extractor
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for url, body in zip(pdf["url"], pdf["body"]):
-                try:
-                    rows.append((url, "\n".join(keep_empty(bytes(body))), None))
-                except Exception as exc:
-                    rows.append((url, None, f"{type(exc).__name__}: {exc}"))
+            rows = [
+                (url, *extract_text(extract, body, keep_empty=True))
+                for url, body in zip(pdf["url"], pdf["body"])
+            ]
             yield pd.DataFrame(rows, columns=["url", "content", "error"])
 
-    extracted = pdf_ok.where(F.col("error").isNull()).select(
+    links = spark.createDataFrame([(pdf_url,)], "url: string")
+    fetched = fetch_stage(links, fetcher)  # no content-type filter: mcp parity
+    extracted = fetched.where(F.col("error").isNull()).select(
         "url", "body"
     ).mapInPandas(run, schema=EXTRACTED_SCHEMA)
-    rows = extracted.collect()  # single-row path: collect IS the response
+    rows = extracted.select(
+        "error",
+        F.struct(*document_columns("url", "content", ingest_date)).alias("doc"),
+    ).collect()  # single-row path: collect IS the response
     if not rows:
         return {"error": "Download failed"}
     if rows[0]["error"] is not None:
         return {"error": f"PDF parse failed: {rows[0]['error']}"}
-    doc_row = (
-        build_document_record(
-            spark.createDataFrame(
-                [(pdf_url, rows[0]["content"])], "sourceURL string, content string"
-            ),
-            ingest_date=ingest_date,
-        )
-        .collect()[0]
-        .asDict(recursive=True)
-    )
+    doc_row = rows[0]["doc"].asDict(recursive=True)
     doc_row["title"] = volume  # mcp_server uses the request's volume as title
     del doc_row["year"], doc_row["tags"]  # absent from the mcp response shape
     return doc_row

@@ -105,6 +105,51 @@ def test_full_pipeline_documents_and_rejects(spark, links):
     assert rej[f"{BASE}/empty.pdf"]["stage"] == "extract/empty"
 
 
+def test_both_sinks_fetch_each_link_once_and_extract_each_pdf_once(
+    spark, links, tmp_path
+):
+    """Documents and rejects are filters of one outcome frame: writing
+    both fetches every not-done link once and extracts every PDF once
+    (the reference's loop, fetch_legal_docs.py:32). A second pipeline
+    over the same inputs fetches again — nothing is reused across runs."""
+    import os
+
+    from ethiopia_legal_etl_spark.operators.ingest import write_documents_json
+
+    log = str(tmp_path / "calls.log")
+
+    def fetcher(url):  # closures: shipped by value to the Python workers
+        with open(log, "a") as fh:
+            fh.write(f"fetch {url}\n")
+        return fake_fetcher(url)
+
+    def extractor(body):
+        with open(log, "a") as fh:
+            fh.write(f"extract {body.decode()}\n")
+        return fake_extractor(body)
+
+    done = spark.createDataFrame([("vol01",)], "base_name: string")
+    todo = sorted(u for u in RESPONSES if u != f"{BASE}/vol01.pdf")
+    for _ in range(2):
+        docs, rejects = ingest_pipeline(
+            links, done, fetcher=fetcher, extractor=extractor,
+            ingest_date="2025-08-15",
+        )
+        write_documents_json(docs, str(tmp_path / "docs"))
+        rejects.write.mode("overwrite").json(str(tmp_path / "rejects"))
+        with open(log) as fh:
+            calls = sorted(fh.read().splitlines())
+        os.remove(log)
+        assert [c for c in calls if c.startswith("fetch ")] == [
+            f"fetch {u}" for u in todo
+        ]
+        assert [c for c in calls if c.startswith("extract ")] == [
+            "extract %PDF-EMPTY", "extract %PDF-GOOD-2",
+        ]
+        assert len(spark.read.json(str(tmp_path / "docs")).collect()) == 1
+        assert len(spark.read.json(str(tmp_path / "rejects")).collect()) == 3
+
+
 def test_binary_sink_writes_per_row_files(spark, tmp_path):
     # A-9: foreachPartition binary sink (downloaded_pdfs/ analog)
     from ethiopia_legal_etl_spark.operators.ingest import write_binary_files
@@ -151,6 +196,33 @@ def test_ingest_single_service_parity(spark):
         fetcher=fake_fetcher, extractor=fake_extractor,
     )
     assert set(err2) == {"error"}
+
+
+def test_ingest_single_runs_one_spark_job(spark):
+    """One /ingest request is one collect: the document record is
+    projected on the extracted frame, not built by a second job. Holds
+    for the document, parse-failure and download-failure responses."""
+    from ethiopia_legal_etl_spark.operators.ingest import ingest_single
+
+    sc = spark.sparkContext
+    cases = {
+        "vol01.pdf": lambda r: r["title"] == "v",
+        "notpdf.pdf": lambda r: r["error"].startswith("PDF parse failed: "),
+        "boom.pdf": lambda r: r == {"error": "Download failed"},
+    }
+    for name, ok in cases.items():
+        group = f"ingest-single-{name}"
+        sc.setJobGroup(group, "one /ingest request")
+        try:
+            resp = ingest_single(
+                spark, "v", f"{BASE}/{name}",
+                fetcher=fake_fetcher, extractor=fake_extractor,
+            )
+        finally:
+            sc.setJobGroup("", "")
+        assert ok(resp), resp
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, name
 
 
 def test_document_schema_matches_declared(spark):

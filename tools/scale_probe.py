@@ -1817,6 +1817,11 @@ def scanfidelity_probe(spark, scratch: str) -> list[dict]:
                 [sys.executable, worker, repo, str(cores), d, mode],
                 capture_output=True, text=True, timeout=900,
             )
+            if r.returncode != 0:
+                raise RuntimeError(
+                    f"scanfidelity worker {mode}/{layout}/local[{cores}] "
+                    f"exited {r.returncode}:\n{r.stderr}"
+                )
             line = r.stdout.strip().splitlines()[-1]
             rec = json.loads(line)
             meds[(mode, layout, cores)] = rec["median"]
